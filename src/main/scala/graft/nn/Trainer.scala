@@ -1,23 +1,23 @@
 package graft.nn
 
 import breeze.linalg.DenseMatrix
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.util.LongAccumulator
 
-/** Distributed mini-batch AE training (M15/M25, SURVEY §3.1/§4.3).
+/** Mini-batch AE training (M15/M25, SURVEY §3.1/§4.3).
   *
   * Faithful to the reference's sequential DataLoader semantics
   * (Simulation_Models/CNC_AE_model_selection.py:233-316): per epoch the
   * rows are re-shuffled by a seeded hash and dealt into batches; each
-  * batch is ONE gradient step. The data never moves to the driver:
-  * each epoch repartitions rows so batch b lives in partition b, and
-  * each step is a single-partition Spark job computing (loss, grad, BN
-  * batch stats) where the rows are; the driver holds only Adam moments
-  * and BN running stats. For cluster-scale batches the same kernel is
-  * aggregable across partitions (grads are sums) — the batch-per-
-  * partition layout is the small-batch fast path.
+  * batch is ONE gradient step. [[train]] runs a whole training run as
+  * one Spark job with one task: the rows are coalesced, in input order,
+  * into a single partition, and that task runs every epoch's shuffle,
+  * every step's gradient, the Adam and BatchNorm updates and the loss
+  * sums where the rows are. Parameters cross once each way per run
+  * (the model in, the trained params and stats out), not once per step.
+  * The trade-off: a lost executor retries the whole run rather than one
+  * step, and one task holds the rows plus the Adam state. [[trainSync]]
+  * stays the cluster path for data or models beyond one task.
   */
 object Trainer {
 
@@ -58,9 +58,19 @@ object Trainer {
     }
   }
 
-  private final class IdPartitioner(n: Int) extends Partitioner {
-    def numPartitions: Int = n
-    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  /** Coalesces every parent partition into one, in partition order, so
+    * the single task sees the rows in the order `zipWithIndex` numbers
+    * them. The default coalescer may start the group with the first
+    * partition that has a preferred location, which reorders the rows
+    * when only some partitions have one; it also yields NO partition for
+    * a 0-partition frame, where this yields one empty one, so an empty
+    * frame still runs its one task. */
+  private object InOrder extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val group = new PartitionGroup()
+      group.partitions ++= parent.partitions
+      Array(group)
+    }
   }
 
   private def mat(rows: Seq[Array[Double]]): DenseMatrix[Double] = {
@@ -81,77 +91,69 @@ object Trainer {
   def train(df: DataFrame, ae: TwoViewAe, cfg: Config): Trained =
     train(df, TwoViewModel(ae), cfg, "x1", "x2")
 
-  /** Train any [[AeModel]] on (x1, x2) array columns. */
+  /** Train any [[AeModel]] on (x1, x2) array columns: one Spark job,
+    * one task (see the object doc). */
   def train(df: DataFrame, model: AeModel, cfg: Config,
       x1Col: String = "x1", x2Col: String = "x2"): Trained = {
-    val sc = df.sparkSession.sparkContext
-    val base: RDD[(Long, (Array[Double], Array[Double]))] = df
-      .select(x1Col, x2Col).rdd
+    val rows = df.select(x1Col, x2Col).rdd
       .map(r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray))
-      .zipWithIndex().map(_.swap)
-      .cache()
-    val n = base.count().toInt
-    val nBatches = math.max(1, (n + cfg.batchSize - 1) / cfg.batchSize)
+      .coalesce(1, shuffle = false, partitionCoalescer = Some(InOrder))
+    val dropoutStream = DropoutStream // read on the driver, not executors
+    val (params, stats, losses) = df.sparkSession.sparkContext
+      .runJob(rows, (it: Iterator[(Array[Double], Array[Double])]) =>
+        fit(model, cfg, dropoutStream, it.toArray))
+      .head
+    Trained(model, params, stats, losses)
+  }
 
+  /** The whole training run over `rows` (row i is the i-th input row),
+    * executed inside one task. */
+  private def fit(model: AeModel, cfg: Config, dropoutStream: Long,
+      rows: Array[(Array[Double], Array[Double])])
+      : (Array[Double], Array[Double], Seq[Double]) = {
+    val n = rows.length
+    val nBatches = (n + cfg.batchSize - 1) / cfg.batchSize // 0 when empty
     val (params, stats) = model.initParams(cfg.seed)
     val adam = new Adam(model.paramCount, cfg.lr, cfg.weightDecay)
     val losses = new scala.collection.mutable.ArrayBuffer[Double]
 
     for (epoch <- 0 until cfg.epochs) {
-      // epoch-seeded global shuffle; batch b == partition b.
+      // epoch-seeded global shuffle; batch b takes ranks
+      // [b·batchSize, (b+1)·batchSize).
       // productHash is deprecated in favor of caseClassHash, which
       // mixes in the class name and CHANGES the hash values — this
       // hash IS the seeded shuffle order every trained model and
       // quality log depends on, so it stays pinned.
-      val epochRdd = base
-        .sortBy { case (i, _) =>
-          (scala.util.hashing.MurmurHash3.productHash(
-            (i, epoch.toLong, cfg.seed)): @annotation.nowarn("cat=deprecation"))
-        }
-        .zipWithIndex()
-        .map { case ((_, row), rank) =>
-          ((rank / cfg.batchSize).toInt, row) }
-        .partitionBy(new IdPartitioner(nBatches))
-        .map(_._2)
-        .persist()
+      val order = Array.tabulate(n)(identity).sortBy { i =>
+        (scala.util.hashing.MurmurHash3.productHash(
+          (i.toLong, epoch.toLong, cfg.seed)): @annotation.nowarn("cat=deprecation"))
+      }
 
       var epochLoss = 0.0
       var seen = 0L
       for (b <- 0 until nBatches) {
-        val snapshot = params.clone() // immutable copy shipped in closure
-        val statsSnap = stats.clone()
-        val modelRef = model
+        val batch = order.slice(b * cfg.batchSize, (b + 1) * cfg.batchSize)
+          .map(rows(_)).toIndexedSeq
         val dropSeed = cfg.seed * 1000003L + epoch * 1009L + b +
-          DropoutStream * 7919L
-        val res = sc.runJob(
-          epochRdd,
-          (it: Iterator[(Array[Double], Array[Double])]) => {
-            val rows = it.toArray
-            if (rows.isEmpty) null
-            else modelRef.batchGradient(snapshot, statsSnap,
-              mat(rows.map(_._1).toIndexedSeq), mat(rows.map(_._2).toIndexedSeq),
-              new java.util.Random(dropSeed))
-          },
-          Seq(b)).head
-        if (res != null) {
-          adam.step(params, res.grads)
-          // BN running-stats momentum update (torch: 0.1 toward batch)
-          var i = 0
-          while (i < stats.length) {
-            stats(i) = (1 - Kernel.BnMomentum) * stats(i) +
-              Kernel.BnMomentum * res.batchStats(i)
-            i += 1
-          }
-          Kernel.qa(stats) // no-op unless the F32 numerics probe is on
-          epochLoss += res.loss * res.n
-          seen += res.n
+          dropoutStream * 7919L
+        val res = model.batchGradient(params, stats,
+          mat(batch.map(_._1)), mat(batch.map(_._2)),
+          new java.util.Random(dropSeed))
+        adam.step(params, res.grads)
+        // BN running-stats momentum update (torch: 0.1 toward batch)
+        var i = 0
+        while (i < stats.length) {
+          stats(i) = (1 - Kernel.BnMomentum) * stats(i) +
+            Kernel.BnMomentum * res.batchStats(i)
+          i += 1
         }
+        Kernel.qa(stats) // no-op unless the F32 numerics probe is on
+        epochLoss += res.loss * res.n
+        seen += res.n
       }
-      epochRdd.unpersist(false)
       losses += (if (seen > 0) epochLoss / seen else 0.0)
     }
-    base.unpersist(false)
-    Trained(model, params, stats, losses.toSeq)
+    (params, stats, losses.toSeq)
   }
 
   /** Cluster-scale synchronous variant: ONE gradient step per epoch,

@@ -1,5 +1,8 @@
 package graft.search
 
+import java.util.concurrent.Executors
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.Splits
@@ -12,8 +15,11 @@ import graft.nn.{AeModel, Trainer}
   * over the SAME published space (:331-340 — lr 1e-5..1e-2 log,
   * λ2 1e-8..1e-5 log, batch {32..512}, epochs {30..150}; ortho
   * multiplier 1e-3..1e3 log for the O-variants/MOCSS —
-  * JISAE-O1_selection.py:415). Every trial is a sequence of Spark
-  * training jobs; no Catalyst involvement (SURVEY §4.3).
+  * JISAE-O1_selection.py:415). Every fold of a trial is one Spark
+  * training job (`Trainer.train`, one task); a trial's first
+  * `warmupSteps` folds, which the pruner can never skip, train
+  * concurrently, and the rest one after another so pruning still saves
+  * work. No Catalyst involvement (SURVEY §4.3).
   */
 object RandomSearch {
 
@@ -197,24 +203,38 @@ object RandomSearch {
     val history = Array.fill(cv)(
       scala.collection.mutable.ArrayBuffer.empty[Double])
     val results = scala.collection.mutable.ArrayBuffer.empty[TrialResult]
+    // runTrial prunes only at step >= warmupSteps, so a trial always
+    // trains its first `warm` folds: those run concurrently
+    val warm = math.min(cv, warmupSteps)
+    val pool = Executors.newFixedThreadPool(math.max(1, warm))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
     def run(hs: Seq[Hypers]): Unit = hs.foreach { h =>
       val t = results.length
       val epochs = math.max(1, math.round(h.epochs * epochScale).toInt)
       val model = mkModel(h)
-      results += runTrial(t, h, cv, warmupSteps, history, { f =>
+      def foldLoss(f: Int): Double = {
         val trainDf = folded.filter(col("fold") =!= f)
         val valDf = folded.filter(col("fold") === f)
         val trained = Trainer.train(trainDf, model,
           Trainer.Config(lr = h.lr, weightDecay = h.l2,
             batchSize = h.batchSize, epochs = epochs, seed = 21))
         Trainer.evaluateLoss(valDf, model, trained.params, trained.stats)
+      }
+      val warmLosses = (0 until warm).map(f => Future(foldLoss(f)))
+      results += runTrial(t, h, cv, warmupSteps, history, { f =>
+        if (f < warm) Await.result(warmLosses(f), Duration.Inf)
+        else foldLoss(f)
       })
     }
-    run(hyperSequence(nTrials, seed))
-    for (r <- 0 until rounds)
-      run(nextRefineHypers(finish(results.toSeq), perRound, seed, r, shrink))
-    folded.unpersist()
+    try {
+      run(hyperSequence(nTrials, seed))
+      for (r <- 0 until rounds)
+        run(nextRefineHypers(finish(results.toSeq), perRound, seed, r, shrink))
+    } finally {
+      pool.shutdown()
+      folded.unpersist()
+    }
     finish(results.toSeq)
   }
 

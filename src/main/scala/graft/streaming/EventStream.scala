@@ -35,8 +35,19 @@ object EventStream {
     * for sizing shards to live state × available cores without a
     * rebuild, same pattern as `SPARK_GRAFT_SHUFFLE`. Local default
     * stays 8 so the driver's bench is comparable round over round. */
-  val DefaultStateShards: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_SHARDS", "8").toInt
+  lazy val DefaultStateShards: Int =
+    parseStateShards(sys.env.get("SPARK_GRAFT_STATE_SHARDS"))
+
+  /** `SPARK_GRAFT_STATE_SHARDS` as a shard count: unset means 8; a value
+    * that is not a positive integer fails naming the variable and the
+    * value at the first runner that uses the default, instead of
+    * surfacing as an opaque initializer error. */
+  private[graft] def parseStateShards(raw: Option[String]): Int =
+    raw.fold(8) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new
+        IllegalArgumentException(
+          s"SPARK_GRAFT_STATE_SHARDS must be a positive integer, got '$v'"))
+    }
 
   /** Live-key estimate feeding `StateStores.configure` (the measured
     * in-heap/RocksDB rule) for the engine's BOUNDED AvailableNow

@@ -100,4 +100,18 @@ class StateStoresSpec extends SparkSpec {
       }
     }
   }
+
+  describe("SPARK_GRAFT_STATE_SHARDS parsing") {
+
+    it("defaults to 8, accepts a positive count, names a bad value") {
+      assert(EventStream.parseStateShards(None) == 8)
+      assert(EventStream.parseStateShards(Some("16")) == 16)
+      for (bad <- Seq("eight", "", "0", "-2", "1e3")) {
+        val e = intercept[IllegalArgumentException](
+          EventStream.parseStateShards(Some(bad)))
+        assert(e.getMessage.contains("SPARK_GRAFT_STATE_SHARDS") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+    }
+  }
 }

@@ -81,6 +81,85 @@ class NnSpec extends SparkSpec {
       assert(t1.params.sameElements(t2.params))
     }
 
+    it("an empty frame trains to the seed's init params and zero losses") {
+      import org.apache.spark.sql.functions.lit
+      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      val cfg = Trainer.Config(lr = 1e-2, batchSize = 16, epochs = 3)
+      val (p0, s0) = Kernel.init(ae, cfg.seed)
+      val noPartitions = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], data.schema)
+      assert(noPartitions.rdd.getNumPartitions == 0)
+      for (empty <- Seq(noPartitions, data.filter(lit(false)))) {
+        val t = Trainer.train(empty, ae, cfg)
+        assert(t.epochLosses == Seq(0.0, 0.0, 0.0))
+        assert(t.params.sameElements(p0) && t.stats.sameElements(s0))
+      }
+    }
+
+    it("fewer rows than batchSize train as one batch per epoch") {
+      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      val small = data.limit(10)
+      def run(batchSize: Int) = Trainer.train(small, ae,
+        Trainer.Config(lr = 1e-2, batchSize = batchSize, epochs = 3))
+      // one batch of all 10 rows whatever the batch size above 10
+      val whole = run(10)
+      for (t <- Seq(run(16), run(512))) {
+        assert(t.epochLosses == whole.epochLosses)
+        assert(t.params.sameElements(whole.params))
+      }
+      assert(whole.epochLosses.forall(l => l > 0 && !l.isNaN))
+      assert(!whole.params.sameElements(Kernel.init(ae, 21)._1))
+    }
+
+    it("rows train in input order when only some partitions have a " +
+        "preferred location") {
+      // Spark's default coalesce(1) starts with the first partition that
+      // has a location (here the second), which would renumber the rows
+      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      val cfg = Trainer.Config(lr = 1e-2, batchSize = 16, epochs = 2)
+      val chunks = data.collect().toSeq.grouped(16).toSeq
+        .zip(Seq(Nil, Seq("hostA"), Nil, Seq("hostB")))
+      val mixed = spark.createDataFrame(
+        spark.sparkContext.makeRDD(chunks).flatMap(identity), data.schema)
+      val a = Trainer.train(mixed, ae, cfg)
+      val b = Trainer.train(data, ae, cfg)
+      assert(a.epochLosses == b.epochLosses && a.params.sameElements(b.params))
+    }
+
+    it("one training run is one Spark job") {
+      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      // 64 rows at batch 16: 12 epochs x 4 batches = 48 steps
+      val cfg = Trainer.Config(lr = 1e-2, batchSize = 16, epochs = 12)
+      val sc = spark.sparkContext
+      val key = "graft.nnspec.phase"
+      val trainJobs = new java.util.concurrent.atomic.AtomicInteger
+      val markerSeen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty(key)) match {
+            case Some("train") => trainJobs.incrementAndGet()
+            case Some("marker") => markerSeen.countDown()
+            case _ =>
+          }
+      }
+      data.count() // materialise the input outside the counted window
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty(key, "train")
+        Trainer.train(data, ae, cfg)
+        // the bus delivers events in order: once the marker job's start
+        // arrives, every training job's start has been counted
+        sc.setLocalProperty(key, "marker")
+        sc.parallelize(Seq(1), 1).count()
+        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        sc.setLocalProperty(key, null)
+        sc.removeSparkListener(listener)
+      }
+      assert(trainJobs.get == 1)
+    }
+
     it("evaluateLoss + Inference round-trip with persisted model") {
       val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
       val cfg = Trainer.Config(lr = 1e-2, batchSize = 32, epochs = 4)

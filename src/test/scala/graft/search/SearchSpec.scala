@@ -50,6 +50,31 @@ class SearchSpec extends SparkSpec {
         seed = 9, epochScale = 0.02)
       assert(a.trials.map(_.avgLoss) == b.trials.map(_.avgLoss))
     }
+
+    it("concurrent warm-up folds match a replay of sequential folds") {
+      // cv = 3, warmupSteps = 2: folds 0 and 1 of every trial train
+      // concurrently, fold 2 after them
+      val (nTrials, cv, seed, scale) = (4, 3, 7L, 0.02)
+      val live = RandomSearch.search(data, mkModel, nTrials = nTrials,
+        cv = cv, seed = seed, warmupSteps = 2, epochScale = scale)
+      val hypers = RandomSearch.hyperSequence(nTrials, seed)
+      val folded = graft.etl.Splits.kFoldColumn(data, "sample_id", cv, 21)
+      val sequential = hypers.map { h =>
+        val model = mkModel(h)
+        val epochs = math.max(1, math.round(h.epochs * scale).toInt)
+        (0 until cv).map { f =>
+          val t = Trainer.train(folded.filter(col("fold") =!= f), model,
+            Trainer.Config(lr = h.lr, weightDecay = h.l2,
+              batchSize = h.batchSize, epochs = epochs, seed = 21))
+          Trainer.evaluateLoss(folded.filter(col("fold") === f), model,
+            t.params, t.stats)
+        }
+      }
+      val rep = RandomSearch.replay(hypers, sequential, cv, warmupSteps = 2)
+      assert(live.trials.map(_.foldLosses) == rep.trials.map(_.foldLosses))
+      assert(live.trials.map(_.pruned) == rep.trials.map(_.pruned))
+      assert(live.best.trial == rep.best.trial)
+    }
   }
 
   describe("Retrain (M23) + GraphModelIO (S10)") {
