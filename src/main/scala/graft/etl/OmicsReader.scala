@@ -1,12 +1,17 @@
 package graft.etl
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Ingestion of omics feature matrices into the engine's canonical shape
   * `(sample_id: String, features: Array[Double])` + a feature-name dim
-  * table `(feature_idx: Int, feature_name: String)`.
+  * table `(feature_idx: Long, feature_name: String)`.
   *
   * Replicates the reference's two load paths
   * (ref: Simulation_Models/CNC_AE_model_selection.py:507-508 — features-
@@ -15,10 +20,11 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale notes: one array column, never tens of thousands of scalar
   * columns (Catalyst plans stay small, projections stay narrow). The
-  * transpose goes through long form `(feature_idx, sample_idx, value)` —
-  * a single shuffle keyed by sample, the documented SURVEY §4.3 path; at
-  * 100 TB the long form itself is the storage format and this reader is
-  * only the edge adapter.
+  * transpose is by feature block: each input split transposes its own
+  * lines, and one shuffle keyed by sample carries samples × input
+  * partitions rows (SURVEY §4.3's "partition by feature block"). At
+  * 100 TB the blocked matrix itself is the storage format and this
+  * reader is only the edge adapter.
   */
 object OmicsReader {
 
@@ -40,50 +46,92 @@ object OmicsReader {
     df.sparkSession.createDataFrame(rdd, schema)
   }
 
-  /** Features-as-rows TSV with an R-style header (header row has one
-    * column fewer than data rows; data rows lead with the feature id).
-    * Returns samples as rows, feature order preserved from the file
-    * (matching the reference's pandas `.T`).
+  /** Features-as-rows TSV with an R-style header (the header line has one
+    * cell fewer than the data lines; each data line leads with the
+    * feature id). Returns samples as rows, feature order preserved from
+    * the file (matching the reference's pandas `.T`).
+    *
+    * Block transpose: the file is read as text, and each input
+    * partition (a run of consecutive file lines) transposes its own
+    * lines in one task, emitting one `(sample_idx, part, chunk)` row per
+    * sample, where `chunk` is that sample's values over the partition's
+    * features. One shuffle keyed by sample concatenates the chunks in
+    * partition order, which is file order. The shuffle carries samples ×
+    * input partitions rows (not features × samples), and a task holds
+    * one split's values. Values go through the ANSI `cast("double")` on
+    * the map side, so a malformed number fails the read.
+    *
+    * Only the first line is the header, and it is read on the driver.
+    * A data line must have exactly n + 1 cells (n samples); any other
+    * width fails with a message naming the feature id. Empty cells read
+    * as null; blank lines are skipped. Cells are unquoted the way the
+    * CSV reader unquotes them (the reference files quote sample and
+    * feature ids). The header is found by the partition's position, so
+    * `path` names one file.
     */
   def readTransposed(spark: SparkSession, path: String): OmicsMatrix = {
-    // The R-style header has one column FEWER than the data rows; Spark
-    // would infer the narrow schema from it and silently drop the last
-    // data column — so count columns from the first line and force an
-    // explicit (n+1)-wide string schema.
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val nHeaderCols = spark.read.text(path).head().getString(0).split("\t").length
-    val schema = StructType(
-      (0 to nHeaderCols).map(i => StructField(s"_c$i", StringType)))
-    val raw = spark.read.option("sep", "\t").schema(schema).csv(path)
-    val cols = raw.columns
-    val lastCol = cols.last
-    // R-style header row is the only row with no value in the last slot.
-    val headerRow = raw.filter(col(lastCol).isNull).head()
-    val sampleIds = (0 until cols.length - 1).map(headerRow.getString)
-
-    val data = raw.filter(col(lastCol).isNotNull)
-    // Stable feature index in file order (distributed zipWithIndex).
-    val indexed = withRowIdx(data, "feature_idx")
-    val featureNames = indexed
-      .select(col("feature_idx"), col(cols.head).as("feature_name"))
-
-    val valueCols = array(scala.collection.immutable.ArraySeq
-      .unsafeWrapArray(cols.tail.map(c => col(c).cast("double"))): _*)
-    val long = indexed.select(col("feature_idx"),
-      posexplode(valueCols).as(Seq("sample_idx", "value")))
-
-    val sampleDim = spark.createDataFrame(
-      sampleIds.zipWithIndex.map { case (s, i) => (i, s) }
-    ).toDF("sample_idx", "sample_id")
-
-    val wide = long
-      .join(broadcast(sampleDim), "sample_idx")
-      .groupBy("sample_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("feature_idx"), col("value")))),
-        s => s.getField("value")).as("features"))
-    OmicsMatrix(wide, featureNames)
+    import spark.implicits._
+    val sampleIds = firstLine(spark, path).split("\t", -1).map(unquote)
+    val n = sampleIds.length
+    val lines = spark.read.text(path).as[String]
+    val chunks = lines.mapPartitions { it =>
+      val part = TaskContext.getPartitionId()
+      val rows = dataLines(it, part, n).toArray
+      if (rows.isEmpty) Iterator.empty
+      else Iterator.tabulate(n) { s =>
+        (s, part, rows.map { r =>
+          val cell = unquote(r(s + 1))
+          if (cell.isEmpty) null else cell
+        })
+      }
+    }.toDF("sample_idx", "part", "chunk")
+    val wide = chunks
+      .select(col("sample_idx"), struct(col("part"),
+        transform(col("chunk"), _.cast("double")).as("chunk")).as("c"))
+      .groupBy("sample_idx")
+      .agg(sort_array(collect_list(col("c"))).as("cs"))
+      .select(
+        element_at(typedLit(sampleIds.toSeq), col("sample_idx") + 1)
+          .as("sample_id"),
+        flatten(transform(col("cs"), _.getField("chunk"))).as("features"))
+    val names = lines.mapPartitions { it =>
+      dataLines(it, TaskContext.getPartitionId(), n).map(r => unquote(r(0)))
+    }.toDF("feature_name")
+    OmicsMatrix(wide, withRowIdx(names, "feature_idx")
+      .select("feature_idx", "feature_name"))
   }
+
+  /** The first line of the file at `path`, read on the driver (no job). */
+  private def firstLine(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try {
+      val line = new BufferedReader(
+        new InputStreamReader(in, StandardCharsets.UTF_8)).readLine()
+      if (line == null)
+        throw new IllegalArgumentException(s"empty omics matrix file: $path")
+      line
+    } finally in.close()
+  }
+
+  /** The data lines of input partition `part`, split into cells: the
+    * first line of partition 0 (the header) and blank lines are
+    * skipped, and a line that is not n + 1 cells wide fails. */
+  private def dataLines(it: Iterator[String], part: Int,
+      n: Int): Iterator[Array[String]] =
+    (if (part == 0) it.drop(1) else it).filter(_.nonEmpty).map { line =>
+      val cells = line.split("\t", -1)
+      if (cells.length != n + 1) throw new IllegalArgumentException(
+        s"feature '${unquote(cells(0))}' has ${cells.length} cells, " +
+          s"expected ${n + 1} (the feature id and $n samples)")
+      cells
+    }
+
+  /** Strips one pair of enclosing double quotes, as the CSV reader does. */
+  private def unquote(cell: String): String =
+    if (cell.length >= 2 && cell.head == '"' && cell.last == '"')
+      cell.substring(1, cell.length - 1)
+    else cell
 
   /** Samples-as-rows TSV (TCGA shape): header present, `idCol` holds the
     * sample id, every other column is one feature (file column order kept).

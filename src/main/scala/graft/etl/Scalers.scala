@@ -57,22 +57,22 @@ object Scalers {
     override def outputEncoder: Encoder[MinMaxState] = Encoders.product[MinMaxState]
   }
 
-  /** One-row DataFrame (mn: array, mx: array) fitted on `featuresCol`.
-    * The aggregation is distributed (map-side combined); only the final
-    * width-sized (min[], max[]) pair reaches the driver. */
-  def fit(df: DataFrame, featuresCol: String = "features"): DataFrame = {
+  /** Elementwise (min[], max[]) of `featuresCol`. The aggregation is
+    * distributed (map-side combined); only the final width-sized pair
+    * reaches the driver. */
+  def fit(df: DataFrame, featuresCol: String = "features"): MinMaxState = {
     import df.sparkSession.implicits._
-    val st = df.select(col(featuresCol)).as[Seq[Double]]
+    df.select(col(featuresCol)).as[Seq[Double]]
       .select(MinMaxAgg.toColumn)
       .head()
-    df.sparkSession.createDataFrame(Seq((st.min.toSeq, st.max.toSeq)))
-      .toDF("mn", "mx")
   }
 
-  /** Rescale `featuresCol` with a fitted (mn, mx) one-row frame
-    * (broadcast — the stats never shuffle the data side). */
-  def transformWith(df: DataFrame, fitted: DataFrame,
+  /** Rescale `featuresCol` with a fitted state (broadcast as one row —
+    * the stats never shuffle the data side). */
+  def transformWith(df: DataFrame, st: MinMaxState,
       featuresCol: String = "features"): DataFrame = {
+    val fitted = df.sparkSession
+      .createDataFrame(Seq((st.min.toSeq, st.max.toSeq))).toDF("mn", "mx")
     val zipped = arrays_zip(col(featuresCol), col("mn"), col("mx"))
     df.crossJoin(broadcast(fitted))
       .withColumn(featuresCol,

@@ -755,10 +755,14 @@ object TextOps {
     // key-cardinality-sized broadcast) without ever re-buffering the
     // big side; the k-th order statistic itself is tie-insensitive, so
     // results are bit-identical (oracle unchanged).
-    val counts = df.groupBy(key).agg(Fn.count(lit(1)).as("nn"))
+    // The join is null-safe (`<=>`): DuckDB's PARTITION BY keeps a NULL
+    // key as its own group, and an equi-join on `key` would drop it.
+    val counts = df.groupBy(col(key).as("__ck"))
+      .agg(Fn.count(lit(1)).as("nn"))
     val ranked = df
       .withColumn("rk", row_number().over(wRk))
-      .join(broadcast(counts), Seq(key))
+      .join(broadcast(counts), col(key) <=> col("__ck"))
+      .drop("__ck")
     val picks = ps.map { case (lbl, p) =>
       Fn.max(when(col("rk") ===
         greatest(lit(1L), ceil(lit(p) * col("nn"))), col("v"))).as(s"x$lbl")

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.{LabelCodec, OmicsReader, Scalers, Splits}
 import graft.ml.GaussianNB
 import graft.nn.{ArchZoo, Inference, Trainer}
 
@@ -17,21 +16,8 @@ object ArchComparison {
   def run(spark: SparkSession, path: String, splitAt: Int = 846,
       epochs: Int = 2, batchSize: Int = 128, lr: Double = 1e-3,
       orthoMultiplier: Double = 0.1): DataFrame = {
-    val m = OmicsReader.readTransposed(spark, path)
-    val labeled = LabelCodec.withDerivedLabel(
-      m.data, LabelCodec.simulationLabelMap)
-    val train = Splits
-      .stratifiedFlag(labeled, "label", "sample_id", 0.8, 42)
-      .filter(col("is_train"))
-    val scaled = Scalers.fitTransform(train)
-    val width = scaled.select(size(col("features"))).head().getInt(0)
-    val paired = scaled.select(
-      col("sample_id"), col("label"), col("label_idx"),
-      slice(col("features"), 1, splitAt).as("x1"),
-      slice(col("features"), splitAt + 1, width - splitAt).as("x2"))
-      .cache()
-    paired.count()
-    val d2 = width - splitAt
+    val prep = SimulationRun.prepare(spark, path, splitAt)
+    val paired = prep.paired
 
     def nbAcc(df: DataFrame): Double = {
       val accs = GaussianNB.crossValidate(df, k = 5, seed = 2023)
@@ -51,7 +37,7 @@ object ArchComparison {
       (name, Double.NaN, Double.NaN, nbAcc(df))
     }
 
-    val archRows = ArchZoo.all(splitAt, d2, orthoMultiplier).map { arch =>
+    val archRows = ArchZoo.all(splitAt, prep.d2, orthoMultiplier).map { arch =>
       val t = Trainer.train(paired, arch.model,
         Trainer.Config(lr = lr, weightDecay = 1e-6, batchSize = batchSize,
           epochs = epochs, seed = 21))

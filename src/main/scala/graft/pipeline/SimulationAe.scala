@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.{LabelCodec, OmicsReader, Scalers, Splits}
 import graft.ml.GaussianNB
 import graft.nn.{Inference, Trainer, TwoViewAe}
 
@@ -11,7 +10,8 @@ import graft.nn.{Inference, Trainer, TwoViewAe}
   * views by positional feature slice (P3 — mocss.py:465-478; the RNA
   * view files are LFS-missing in the reference checkout, FIXTURES §1.1)
   * → CNC-style AE training (M15) → embeddings + per-subject recon loss
-  * (M14/M24/A10) → GaussianNB CV on embeddings (M1).
+  * (M14/M24/A10) → GaussianNB CV on embeddings (M1). The data prep is
+  * [[SimulationRun.prepare]].
   */
 object SimulationAe {
 
@@ -23,10 +23,9 @@ object SimulationAe {
   def runArch(spark: SparkSession, path: String,
       mkArch: (Int, Int) => graft.nn.ArchZoo.Arch, splitAt: Int = 846,
       epochs: Int = 2, batchSize: Int = 128, lr: Double = 1e-3): Result = {
-    val paired = prepare(spark, path, splitAt)
-    val width = paired.select(size(col("x1"))).head().getInt(0)
-    val w2 = paired.select(size(col("x2"))).head().getInt(0)
-    val arch = mkArch(width, w2)
+    val prep = SimulationRun.prepare(spark, path, splitAt)
+    val paired = prep.paired
+    val arch = mkArch(prep.splitAt, prep.d2)
     val trained = Trainer.train(paired, arch.model,
       Trainer.Config(lr = lr, weightDecay = 1e-6, batchSize = batchSize,
         epochs = epochs, seed = 21))
@@ -41,30 +40,12 @@ object SimulationAe {
     Result(trained.epochLosses, recon, nb)
   }
 
-  /** ingest → label → stratified train split → scale → slice views. */
-  private def prepare(spark: SparkSession, path: String,
-      splitAt: Int): DataFrame = {
-    val m = OmicsReader.readTransposed(spark, path)
-    val labeled = LabelCodec.withDerivedLabel(
-      m.data, LabelCodec.simulationLabelMap)
-    val train = Splits
-      .stratifiedFlag(labeled, "label", "sample_id", 0.8, 42)
-      .filter(col("is_train"))
-    val scaled = Scalers.fitTransform(train)
-    val width = scaled.select(size(col("features"))).head().getInt(0)
-    scaled.select(
-      col("sample_id"), col("label"), col("label_idx"),
-      slice(col("features"), 1, splitAt).as("x1"),
-      slice(col("features"), splitAt + 1, width - splitAt).as("x2"))
-      .cache()
-  }
-
   def run(spark: SparkSession, path: String, splitAt: Int = 846,
       hidden: Seq[Int] = Seq(64), embed: Int = 16,
       epochs: Int = 5, batchSize: Int = 128, lr: Double = 1e-3): Result = {
-    val paired = prepare(spark, path, splitAt)
-    val w2 = paired.select(size(col("x2"))).head().getInt(0)
-    val ae = TwoViewAe.cncSized(splitAt, w2, hidden, embed, drop = 0.1)
+    val prep = SimulationRun.prepare(spark, path, splitAt)
+    val paired = prep.paired
+    val ae = TwoViewAe.cncSized(splitAt, prep.d2, hidden, embed, drop = 0.1)
     val trained = Trainer.train(paired, ae,
       Trainer.Config(lr = lr, weightDecay = 1e-6, batchSize = batchSize,
         epochs = epochs, seed = 21))

@@ -24,7 +24,11 @@ object SimulationRun {
       retrainLosses: Seq[Double], reconStats: (Double, Double),
       nbCv: DataFrame, testReconStats: (Double, Double))
 
-  /** §3.1 prep output: `paired` is cached; caller unpersists. */
+  /** §3.1 prep output. `paired` (the scaled train split as x1/x2
+    * views) is materialized and is the only cached frame, so
+    * `paired.unpersist()` releases everything `prepare` holds.
+    * `flagged` (every sample with `is_train`) is NOT cached: reading it
+    * re-reads the input file. */
   final case class Prepared(paired: DataFrame, flagged: DataFrame,
       width: Int, splitAt: Int) {
     def d2: Int = width - splitAt
@@ -36,7 +40,9 @@ object SimulationRun {
       testReconStats: (Double, Double))
 
   /** §3.1 data prep: scan → derived labels → stratified 80/20 →
-    * per-column min-max on the train split → positional x1/x2 pair. */
+    * per-column min-max on the train split → positional x1/x2 pair.
+    * The input file is scanned once: the train split is cached for the
+    * scaler fit and the `paired` build, then released. */
   def prepare(spark: SparkSession, path: String,
       splitAt: Int = 846): Prepared = {
     val m = OmicsReader.readTransposed(spark, path)
@@ -44,14 +50,17 @@ object SimulationRun {
       m.data, LabelCodec.simulationLabelMap)
     val flagged = Splits
       .stratifiedFlag(labeled, "label", "sample_id", 0.8, 42)
-    val train = flagged.filter(col("is_train"))
-    val scaled = Scalers.fitTransform(train)
-    val width = scaled.select(size(col("features"))).head().getInt(0)
-    val paired = scaled.select(
-      col("sample_id"), col("label"), col("label_idx"),
-      slice(col("features"), 1, splitAt).as("x1"),
-      slice(col("features"), splitAt + 1, width - splitAt).as("x2"))
+    val train = flagged.filter(col("is_train")).cache()
+    val st = Scalers.fit(train)
+    val width = st.min.length
+    val paired = Scalers.transformWith(train, st)
+      .select(
+        col("sample_id"), col("label"), col("label_idx"),
+        slice(col("features"), 1, splitAt).as("x1"),
+        slice(col("features"), splitAt + 1, width - splitAt).as("x2"))
       .cache()
+    paired.count()
+    train.unpersist()
     Prepared(paired, flagged, width, splitAt)
   }
 

@@ -531,4 +531,16 @@ class TextOpsSpec extends SparkSpec {
     assert(replayed.except(merged).count() == 0 &&
       merged.except(replayed).count() == 0)
   }
+
+  it("exactOrderStats keeps a NULL-key group, as DuckDB's PARTITION BY") {
+    import spark.implicits._
+    val df = Seq[(Option[String], Double)](
+      (Some("a"), 4.0), (Some("a"), 1.0), (Some("a"), 3.0), (Some("a"), 2.0),
+      (None, 30.0), (None, 10.0), (None, 20.0)).toDF("key", "v")
+    val got = TextOps.exactOrderStats(df, "key",
+        Seq(("50", 0.5), ("100", 1.0)))
+      .collect().map(r => Option(r.getString(0)) ->
+        (r.getDouble(1), r.getDouble(2))).toMap
+    assert(got == Map(Some("a") -> (2.0, 4.0), None -> (20.0, 30.0)))
+  }
 }
